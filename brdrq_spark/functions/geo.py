@@ -25,6 +25,7 @@ from brdrq_spark.geom import (
     rings_to_wkt,
 )
 from brdrq_spark.grid import cell_cover_bbox
+from brdrq_spark.worker import drop_zip_finders
 
 GEO_FEATURES_SCHEMA = T.StructType(
     [
@@ -49,6 +50,7 @@ def geo_features_udf(res: int, dilate: float = 0.0):
 
     @F.pandas_udf(GEO_FEATURES_SCHEMA)
     def _feat(wkb: pd.Series) -> pd.DataFrame:
+        drop_zip_finders()
         rows = []
         for b in wkb:
             rings = rings_from_wkb(b)
@@ -89,6 +91,7 @@ def sym_diff_area_udf():
     from brdrq_spark.geom.clip import boolean_op_multi
 
     def _sym(a_wkb: pd.Series, b_wkb: pd.Series) -> pd.Series:
+        drop_zip_finders()
         out = []
         for a, b in zip(a_wkb, b_wkb):
             ra = rings_from_wkb(a) if a is not None else []
@@ -114,6 +117,7 @@ def area_udf():
     wasted work."""
 
     def _area(wkb: pd.Series) -> pd.Series:
+        drop_zip_finders()
         return pd.Series(
             [rings_area(rings_from_wkb(b)) if b is not None else 0.0 for b in wkb],
             dtype="float64",
@@ -130,6 +134,7 @@ def geom_type_udf(wkb: pd.Series) -> pd.Series:
     is tagged from the type word; polygon WKB by decoded ring structure:
     'MultiPolygon' | 'Polygon' | '(Multi)LineString' | '(Multi)Point'
     | 'Empty'."""
+    drop_zip_finders()
 
     def tag(b):
         if not b or len(b) < 5:
@@ -154,14 +159,17 @@ def geom_type_udf(wkb: pd.Series) -> pd.Series:
 def make_valid_udf(wkb: pd.Series) -> pd.Series:
     """fixgeometries + Multi-promotion + dropMZ in one normalization pass
     (reference P1-P4: brdrq_utils.py:1536-1568, 935-961)."""
+    drop_zip_finders()
     return wkb.map(lambda b: rings_to_wkb(normalize(rings_from_wkb(b))) if b else None)
 
 
 @F.pandas_udf(T.BinaryType())
 def wkt_to_wkb_udf(wkt: pd.Series) -> pd.Series:
+    drop_zip_finders()
     return wkt.map(lambda s: rings_to_wkb(rings_from_wkt(s)) if s else None)
 
 
 @F.pandas_udf(T.StringType())
 def wkb_to_wkt_udf(wkb: pd.Series) -> pd.Series:
+    drop_zip_finders()
     return wkb.map(lambda b: rings_to_wkt(rings_from_wkb(b)) if b else None)

@@ -29,7 +29,7 @@ correction_distance (0.01 m default,
 brdrq_algorithm_autocorrectborders.py:193).
 
 Execution shape: candidate pairs (cell join) → geometries joined back →
-``groupBy(theme_id).applyInPandas(kernel)``. One group = one thematic
+``stream_groups(theme_id, kernel)``. One group = one thematic
 feature with its O(1)-ish candidate parcels; the rd grid is looped
 *inside* the kernel so per-pair intersections are computed once and
 reused across distances (the reference recomputes per distance —
@@ -62,6 +62,7 @@ from brdrq_spark.geom.wkb import polygon_bboxes_batch, rings_from_wkb_hybrid
 from brdrq_spark.geom.coarse import snap_normalize
 from brdrq_spark.geom.clip import area_of_op
 from brdrq_spark.grid import cell_cover_bbox, pick_resolution
+from brdrq_spark.worker import stream_groups
 
 _TINY = 1e-6  # m²; below = empty for relevance purposes
 
@@ -90,7 +91,7 @@ OD_SNAP_ALL_SIDE = "SNAP_ALL_SIDE"
 _OD_SNAP_MODES = (OD_SNAP_SINGLE_SIDE, OD_SNAP_ALL_SIDE)
 
 
-@dataclass
+@dataclass(frozen=True)
 class AlignConfig:
     """Processor knobs (reference ProcessorConfig,
     plugin/brdrq/brdrq_algorithm_common.py:85-102; defaults
@@ -108,10 +109,6 @@ class AlignConfig:
     max_candidates_per_theme: int = 2000  # admission control (O5 analogue)
     cell_res: int | None = None  # tile-assignment resolution; None = auto
     nseg: int = 8  # arc segments for erosion tests (speed/precision knob)
-    # kernel-stage partition count; None = 4x defaultParallelism. Pin it
-    # when comparing runs at different core counts so both levels see the
-    # same per-partition work (scaling evidence, BASELINE.md).
-    kernel_partitions: int | None = None
     # OD snap densification: no OD edge longer than this before snapping
     # (reference snap_max_segment_length default 2,
     # plugin/brdrq/brdrq_settings.py:294-304)
@@ -423,33 +420,6 @@ def _finalize(parts, theme_rings, ref_ring_sets, od_part, rd: float, cfg: AlignC
         "relevant_diff": boolean_op(rel_diff, [], "union"),
         "all_refs": all_refs,
     }
-
-
-def _make_stream_kernel(cfg: AlignConfig, res: int):
-    """Partition-streaming wrapper: one Arrow stream per partition
-    (mapInPandas) instead of one round-trip per theme group
-    (applyInPandas). Rows arrive repartitioned and sorted by theme_id;
-    a theme split across adjacent Arrow batches is buffered until its
-    last row is seen. Cuts JVM<->Python chatter ~group_count times."""
-    kernel = _make_kernel(cfg, res)
-
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last_tid = pdf["theme_id"].iloc[-1]
-            complete = pdf[pdf["theme_id"] != last_tid]
-            buf = pdf[pdf["theme_id"] == last_tid]
-            for _, g in complete.groupby("theme_id", sort=False):
-                yield kernel(g)
-        if buf is not None and len(buf):
-            yield kernel(buf)
-
-    return stream
 
 
 def _make_kernel(cfg: AlignConfig, res: int):
@@ -855,11 +825,6 @@ def align(
     require_same_crs(cfg.crs, cfg.ref_crs if cfg.ref_crs is not None else cfg.crs)
     grouped, res = align_candidate_rows(spark, theme_df, ref_df, cfg, broadcast_ref)
 
-    # partition-streaming kernel: co-locate each theme's candidate rows,
-    # sort so groups are contiguous, then stream whole partitions through
-    # one pandas iterator (see _make_stream_kernel). 4x parallelism:
-    # theme cost varies, smaller partitions keep the stage tail short.
-    par = spark.sparkContext.defaultParallelism
-    n_part = cfg.kernel_partitions or par * 4
-    parts = grouped.repartition(n_part, "theme_id").sortWithinPartitions("theme_id")
-    return parts.mapInPandas(_make_stream_kernel(cfg, res), schema=ALIGN_SCHEMA)
+    # one kernel call per theme, its candidate rows together; the stage
+    # is sized from the shuffle's runtime statistics (see stream_groups)
+    return stream_groups(grouped, "theme_id", _make_kernel(cfg, res), ALIGN_SCHEMA)

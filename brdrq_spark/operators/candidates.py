@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from brdrq_spark.functions.geo import geo_features_udf
 from brdrq_spark.grid import pick_resolution
+from brdrq_spark.worker import drop_zip_finders
 
 
 def plan_partitions(df: DataFrame) -> int:
@@ -101,6 +102,7 @@ def cells_exploded(
     names = [f.name for f in fields]
 
     def gen(batches):
+        drop_zip_finders()
         for pdf in batches:
             # phase 1 — VECTORIZED batch decode (geom.wkb
             # polygon_bboxes_batch: one numpy offset walk over the
@@ -210,6 +212,7 @@ def _fine_cells_udf(fine_res: int, dilate: float, prefix: str):
     from brdrq_spark.grid import cell_bounds, cell_cover_bbox
 
     def fine(cell, mnx, mny, mxx, mxy):
+        drop_zip_finders()
         out = []
         for c, a, b, cc, d in zip(cell, mnx, mny, mxx, mxy):
             cb = cell_bounds(int(c))

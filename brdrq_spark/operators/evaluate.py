@@ -24,6 +24,8 @@ Everything after the align pass is pure Spark window algebra — no UDFs.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -243,8 +245,6 @@ def evaluate(
     cfg = config or AlignConfig()
     blocked = None
     if auto_step:
-        from dataclasses import replace as _dc_replace
-
         from brdrq_spark.functions.geo import area_udf
 
         with_area = theme_df.withColumn("_o5_area", area_udf()(F.col("geom_wkb")))
@@ -266,7 +266,7 @@ def evaluate(
         step_fine, _ = adaptive_grid(0.0, max_rd)
         step_coarse, _ = adaptive_grid(MAX_AREA_OPTIMIZATION + 1.0, max_rd)
         if step_fine == step_coarse:
-            bcfg = _dc_replace(
+            bcfg = replace(
                 cfg, relevant_distances=distance_grid(max_rd, step_fine)
             )
             aligned = align(
@@ -286,7 +286,7 @@ def evaluate(
                     F.lit(step_coarse),
                 ).otherwise(F.lit(step_fine)),
             ).drop("_o5_area")
-            bcfg = _dc_replace(
+            bcfg = replace(
                 cfg,
                 relevant_distances=distance_grid(max_rd, step_fine),
                 step_col="_o5_step",
@@ -295,8 +295,8 @@ def evaluate(
                 spark, stepped, ref_df, bcfg, broadcast_ref=broadcast_ref
             )
     else:
-        cfg.relevant_distances = distance_grid(max_rd, step)
-        aligned = align(spark, theme_df, ref_df, cfg, broadcast_ref=broadcast_ref)
+        bcfg = replace(cfg, relevant_distances=distance_grid(max_rd, step))
+        aligned = align(spark, theme_df, ref_df, bcfg, broadcast_ref=broadcast_ref)
     scored = add_stability(aligned, eps=eps, min_stable=min_stable)
 
     preds = scored.filter(F.col("is_prediction"))

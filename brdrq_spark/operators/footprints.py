@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from brdrq_spark.geom import rings_area, rings_to_wkb
 from brdrq_spark.raster.footprint import footprint_from_pixels
 from brdrq_spark.raster.png import decode_image
+from brdrq_spark.worker import drop_zip_finders
 
 FOOTPRINT_SCHEMA = T.StructType(
     [
@@ -45,6 +46,7 @@ def extract_footprints(images: DataFrame) -> DataFrame:
     """Vectorized raster→vector pass (SURVEY.md §7.1 M6)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             out = []
             for r in pdf.itertuples(index=False):
@@ -79,6 +81,7 @@ def verify_invariants(images_after: DataFrame, expected: DataFrame) -> DataFrame
 
     @F.pandas_udf(T.StringType())
     def sha_udf(b: pd.Series, w: pd.Series, h: pd.Series, fmt: pd.Series) -> pd.Series:
+        drop_zip_finders()
         return pd.Series(
             [
                 pixel_sha(bb, int(ww), int(hh), ff)

@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from brdrq_spark.geom import rings_from_wkb
 from brdrq_spark.geom.core import _edges, _seg_point_dist2
 from brdrq_spark.operators.candidates import candidate_pairs
+from brdrq_spark.worker import drop_zip_finders
 
 KNN_SCHEMA = T.StructType(
     [
@@ -94,6 +95,7 @@ def knn_boundary_segments(
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         theme_id = pdf["theme_id"].iloc[0]
         rings = rings_from_wkb(pdf["theme_wkb"].iloc[0])
         if not rings:
@@ -164,6 +166,7 @@ def theme_vertices(theme_df: DataFrame) -> DataFrame:
     so anti-joins against kNN output line up index-for-index."""
 
     def explode(it):
+        drop_zip_finders()
         for pdf in it:
             tids: list[str] = []
             idxs: list[int] = []

@@ -40,6 +40,7 @@ from brdrq_spark.geom.wkb import rings_from_wkb_hybrid
 from brdrq_spark.geom.core import _edges
 from brdrq_spark.operators.align import AlignConfig, align_candidate_rows
 from brdrq_spark.operators.snaplines import SNAP_NO_PREFERENCE, _snap_vertices
+from brdrq_spark.worker import stream_groups
 
 # Processor ids mirror the reference enum (brdrq_utils.py:102-111;
 # topology is registered at :229). Dieussaert is commented out of the
@@ -242,22 +243,4 @@ def align_network(
             ]
         )
 
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last = pdf["theme_id"].iloc[-1]
-            done = pdf[pdf["theme_id"] != last]
-            buf = pdf[pdf["theme_id"] == last]
-            for _, g in done.groupby("theme_id", sort=False):
-                yield kernel(g)
-        if buf is not None and len(buf):
-            yield kernel(buf)
-
-    par = spark.sparkContext.defaultParallelism
-    parts = grouped.repartition(par * 4, "theme_id").sortWithinPartitions("theme_id")
-    return parts.mapInPandas(stream, schema=NETWORK_SCHEMA)
+    return stream_groups(grouped, "theme_id", kernel, NETWORK_SCHEMA)

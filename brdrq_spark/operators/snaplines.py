@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from brdrq_spark.geom.core import _edges, _seg_point_dist2
 from brdrq_spark.geom.wkb import lines_from_wkb, lines_to_wkb, rings_from_wkb_hybrid
 from brdrq_spark.grid import pick_resolution
+from brdrq_spark.worker import drop_zip_finders, stream_groups
 
 
 SNAP_NO_PREFERENCE = "NO_PREFERENCE"
@@ -159,6 +160,8 @@ def align_lines(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def line_cells(wkb: pd.Series) -> pd.Series:
+        drop_zip_finders()
+
         def cover(b):
             ls = lines_from_wkb(b)
             if not ls:
@@ -196,22 +199,6 @@ def align_lines(
             )
         )
     )
-
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last = pdf["theme_id"].iloc[-1]
-            done = pdf[pdf["theme_id"] != last]
-            buf = pdf[pdf["theme_id"] == last]
-            for _, g in done.groupby("theme_id", sort=False):
-                yield _snap_one(g)
-        if buf is not None and len(buf):
-            yield _snap_one(buf)
 
     def _snap_one(pdf: pd.DataFrame) -> pd.DataFrame:
         theme_id = pdf["theme_id"].iloc[0]
@@ -261,5 +248,4 @@ def align_lines(
             ]
         )
 
-    parts = grouped.repartition(par * 4, "theme_id").sortWithinPartitions("theme_id")
-    return parts.mapInPandas(stream, schema=SNAPLINE_SCHEMA)
+    return stream_groups(grouped, "theme_id", _snap_one, SNAPLINE_SCHEMA)

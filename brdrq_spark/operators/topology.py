@@ -45,6 +45,7 @@ from brdrq_spark.geom.wkb import rings_from_wkb_batch, rings_from_wkb_hybrid
 from brdrq_spark.grid import cell_cover_bbox, pick_resolution
 from brdrq_spark.operators.network import _densify_with_mask
 from brdrq_spark.operators.snaplines import _snap_vertices
+from brdrq_spark.worker import drop_zip_finders, stream_groups
 
 EDGE_SCHEMA = T.StructType(
     [
@@ -84,6 +85,7 @@ TOPOLOGY_SCHEMA = T.StructType(
 
 
 def _decompose(batches):
+    drop_zip_finders()
     for pdf in batches:
         yield _decompose_batch(pdf)
 
@@ -231,6 +233,7 @@ def _make_snap_kernel(rd: float, max_seg: float):
 
 def _reassemble(rd: float):
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_zip_finders()
         theme_id = pdf["theme_id"].iloc[0]
         rings = []
         remark = ""
@@ -319,6 +322,7 @@ def align_topology(
     dilate = 2.0 * rd * 1.01
 
     def _cells(ax: pd.Series, ay: pd.Series, bx: pd.Series, by: pd.Series) -> pd.Series:
+        drop_zip_finders()
         out = []
         for a0, a1, b0, b1 in zip(ax, ay, bx, by):
             out.append(
@@ -352,29 +356,7 @@ def align_topology(
     )
 
     snap = _make_snap_kernel(rd, snap_max_segment_length)
-
-    def stream(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                buf = None
-                continue
-            last = pdf["ekey"].iloc[-1]
-            done = pdf[pdf["ekey"] != last]
-            buf = pdf[pdf["ekey"] == last]
-            for _, g in done.groupby("ekey", sort=False):
-                yield snap(g)
-        if buf is not None and len(buf):
-            yield snap(buf)
-
-    par = spark.sparkContext.defaultParallelism
-    snapped = (
-        grouped.repartition(par * 4, "ekey")
-        .sortWithinPartitions("ekey")
-        .mapInPandas(stream, schema=SNAPPED_SCHEMA)
-    )
+    snapped = stream_groups(grouped, "ekey", snap, SNAPPED_SCHEMA)
 
     # left join: candidate-less edges keep their identity polyline and
     # count as unshared-unknown -> coalesce on the membership-side count

@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from brdrq_spark.geom import normalize, rings_from_wkb, rings_to_wkb
 from brdrq_spark.geom.core import ring_area
 from brdrq_spark.geom.wkb import _group_polygons
+from brdrq_spark.worker import drop_zip_finders
 
 GEOJSON_SCHEMA = T.StructType(
     [
@@ -221,6 +222,7 @@ def read_geojson(
     if not split_features:
 
         def parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            drop_zip_finders()
             for pdf in it:
                 rows = []
                 for txt in pdf["value"]:
@@ -238,6 +240,7 @@ def read_geojson(
     chunk = 4096
 
     def split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             for txt in pdf["value"]:
                 if not txt or not txt.strip():
@@ -258,6 +261,7 @@ def read_geojson(
     feat_rows = feat_rows.repartition(par * 2)
 
     def decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         for pdf in it:
             rows = [
                 _feature_to_row(json.loads(s), int(i), id_field)
@@ -270,6 +274,8 @@ def read_geojson(
 
 @F.pandas_udf(T.StringType())
 def wkb_to_geojson_udf(wkb: pd.Series) -> pd.Series:
+    drop_zip_finders()
+
     def conv(b):
         if not b:
             return None
@@ -406,6 +412,7 @@ def write_geojson_parts(
     gj_df = df.withColumn("_gj", wkb_to_geojson_udf(F.col(geom_col)))
 
     def to_fc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_finders()
         feats: list[dict] = []
         for pdf in it:
             # positional zip: itertuples would mangle the _gj column name

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from brdrq_spark.worker import drop_zip_finders
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -38,6 +40,7 @@ _STATE_SCHEMA = T.StructType(
 
 def _make_session_fn(gap_us: int):
     def update(key, pdf_iter, state):
+        drop_zip_finders()
         user_id = key[0]
         cur = state.get if state.exists else None  # (start, end, n)
         closed = []

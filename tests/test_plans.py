@@ -58,3 +58,24 @@ def test_whole_stage_codegen_covers_relational_query(spark):
     plan = _plan(df)
     # codegen'd spans render as "*(n) Operator" in the final plan
     assert "*(1)" in plan or "WholeStageCodegen" in plan
+
+
+def test_align_kernel_exchange_is_data_sized(spark):
+    """align's theme_id exchange names no partition count, so AQE sizes
+    the kernel stage from the shuffle's runtime statistics: a few themes
+    run a few Python tasks, not a fixed multiple of the cores."""
+    from brdrq_spark.operators.align import AlignConfig, align
+    from brdrq_spark.sources.synthetic import reference_parcels, thematic_polygons
+
+    ref = spark.createDataFrame(reference_parcels(6, 6, seed=2))
+    th = spark.createDataFrame(thematic_polygons(3, 6, 6, seed=2))
+    out = align(spark, th, ref, AlignConfig(), broadcast_ref=True)
+    assert len(out.collect()) == 3  # AQE finalizes the plan on execution
+    plan = _plan(out)
+    assert plan.startswith("AdaptiveSparkPlan isFinalPlan=true")
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    ex = [i for i, ln in enumerate(final) if "hashpartitioning(theme_id" in ln]
+    assert len(ex) == 1
+    assert "REPARTITION_BY_COL" in final[ex[0]], plan
+    above = final[max(0, ex[0] - 3) : ex[0]]
+    assert any("AQEShuffleRead" in ln and "coalesced" in ln for ln in above), plan

@@ -172,3 +172,25 @@ def test_fused_auto_step_matches_per_bucket_aligns(spark, max_rd):
     assert len(f_rows) == 2 * len(distance_grid(max_rd, fine)) + len(
         distance_grid(max_rd, coarse)
     )
+
+
+def test_evaluate_leaves_caller_config_unchanged(spark):
+    """evaluate() sweeps its own grid on a copy of the caller's
+    AlignConfig: the caller's relevant_distances must come back as
+    given, and the sweep still runs on distance_grid(max_rd, step)."""
+    from brdrq_spark.operators.align import AlignConfig
+    from brdrq_spark.operators.evaluate import evaluate
+
+    themes = spark.createDataFrame(
+        pd.DataFrame([{"theme_id": "t0", "geom_wkb": _rect_wkb(0.3, 0.2, 10, 10)}])
+    )
+    refs = spark.createDataFrame(
+        pd.DataFrame([{"ref_id": "r0", "geom_wkb": _rect_wkb(0, 0, 10, 10)}])
+    )
+    cfg = AlignConfig(relevant_distances=[2.0])
+    out = evaluate(
+        spark, themes, refs, max_rd=1.0, step=0.5, config=cfg, broadcast_ref=True
+    )
+    assert cfg.relevant_distances == [2.0]
+    rds = {round(r.brdr_relevant_distance, 2) for r in out.collect()}
+    assert rds and rds <= {0.0, 0.5, 1.0}
